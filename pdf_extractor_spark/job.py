@@ -14,8 +14,54 @@ commits one chunk, and re-running picks up only new files/epochs.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
+
+try:
+    import pdf_extractor_spark  # noqa: F401
+except ModuleNotFoundError:  # plain `python pdf_extractor_spark/job.py`
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pdf_extractor_spark.spark import curate, materialize, neardup, pack, signals
+from pdf_extractor_spark.spark.lineage import (
+    CommitLog,
+    RunReport,
+    compact_chunks,
+    reextract_parts,
+    run_extraction,
+)
+
+# The derived stages, in chain order. Each module's STAGE record names its
+# flag, report verb, output schema and options; every per-stage decision
+# below (exclusivity, option scoping, guards, dispatch, --compact) reads
+# it, so main() never branches on a stage name.
+STAGE_MODULES = (signals, curate, neardup, pack, materialize)
+_STAGE_OF_OPTION = {d: m.STAGE for m in STAGE_MODULES for d in m.STAGE.options}
+# stage options --export-zip also consumes (the shipped-corpus filters)
+_EXPORT_OPTIONS = ("kept_from", "drop_neardups_from")
+# flags only an extraction run consumes; a stage mode refuses them all
+_EXTRACTION_ONLY = (
+    "watch", "ocr_stage", "refresh_parts", "route_needs_ocr", "export_zip",
+    "passwords", "password_manifest", "parts_per_chunk", "num_partitions",
+    "input_format",
+)
+
+
+def _flag(dest: str) -> str:
+    return "--" + dest.replace("_", "-")
+
+
+def _expire_and_gc(log: CommitLog, args: argparse.Namespace) -> None:
+    """Retention/GC after a run. Both are pure CommitLog filesystem
+    maintenance (schema-independent, markers always kept), so they apply
+    to a stage table exactly as to the stage-1 table."""
+    if args.expire_older_than is not None:
+        gone = log.expire_snapshots(older_than=time.time() - args.expire_older_than)
+        print(f"SNAPSHOTS_EXPIRED chunks={gone}")
+    if args.gc_orphans_older_than is not None:
+        swept = log.gc_orphans(grace_s=args.gc_orphans_older_than)
+        print(f"ORPHANS_REMOVED dirs={len(swept)}")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -121,50 +167,14 @@ def main(argv: list[str] | None = None) -> int:
                         "setting for unbounded key spaces (see "
                         "streaming/statestore.py); pinned per checkpoint "
                         "at first start")
-    p.add_argument("--signals", action="store_true",
-                   help="run the derived quality-signals pass instead of "
-                        "extraction: --input is a committed extraction table "
-                        "root, --output receives the signals table "
-                        "(incremental: only source snapshots committed since "
-                        "the last run are recomputed; exactly-once via the "
-                        "same commit markers)")
-    p.add_argument("--curate", action="store_true",
-                   help="run the curation-verdict pass instead of "
-                        "extraction: --input is a committed extraction table "
-                        "root, --output receives the verdict table (gates + "
-                        "exact dedup against the accumulated kept-digest "
-                        "index; incremental and exactly-once like --signals)")
-    p.add_argument("--neardup", action="store_true",
-                   help="run the near-duplicate pass instead of extraction: "
-                        "--input is a committed extraction table root, "
-                        "--output receives per-doc LSH band fingerprints + "
-                        "verified dup_of verdicts (banded MinHash candidates "
-                        "checked against the batch AND the accumulated band "
-                        "index, exact-Jaccard verified; incremental and "
-                        "exactly-once like --signals)")
-    p.add_argument("--pack", action="store_true",
-                   help="run the context-packing pass instead of extraction: "
-                        "--input is a committed extraction table root, "
-                        "--output receives per-doc placements in the "
-                        "512-token context stream (window-local packing, "
-                        "pack_epoch = consumed source snapshot; incremental "
-                        "and exactly-once like --signals). With --kept-from "
-                        "CURATE_ROOT [--drop-neardups-from NEARDUP_ROOT] "
-                        "and --rebuild, packs the composed kept corpus")
+    for m in STAGE_MODULES:
+        p.add_argument(m.STAGE.flag, action="store_true", help=m.STAGE.help)
     p.add_argument("--cost", choices=["ws", "bpe"], default=None,
                    help="with --pack: the packing cost model — 'ws' "
                         "(whitespace tokens, default) or 'bpe' (tokenizer "
                         "pieces; merge rules derived from the table's "
                         "first window and frozen in its commit markers, "
                         "reused by every later incremental window)")
-    p.add_argument("--materialize", action="store_true",
-                   help="run the shard-materialization pass instead of "
-                        "extraction: --input is a committed extraction "
-                        "table root, --pack-table the committed placement "
-                        "table a prior --pack run produced over it, "
-                        "--output receives the assembled (pack_epoch, ctx, "
-                        "text) context rows (snapshot-pinned gather join; "
-                        "incremental and exactly-once like --signals)")
     p.add_argument("--pack-table", type=str, default=None, metavar="DIR",
                    help="with --materialize: the committed pack placement "
                         "table root to gather from")
@@ -177,7 +187,7 @@ def main(argv: list[str] | None = None) -> int:
                         "only kept partners, so composing it drops every "
                         "residual)")
     p.add_argument("--rebuild", action="store_true",
-                   help="with --signals/--curate/--neardup/--pack: full recompute "
+                   help="with a derived-stage flag: full recompute "
                         "committed as one overwrite chunk (required after a "
                         "source partition overwrite; under --curate dedup — "
                         "and under --neardup near-dup matching — is "
@@ -213,31 +223,29 @@ def main(argv: list[str] | None = None) -> int:
         pw.encode("utf-8") for pw in (args.passwords or "").split(",") if pw
     )
 
+    def given(dest: str) -> bool:
+        return getattr(args, dest) != p.get_default(dest)
+
     # modes and flags that would otherwise be silent no-ops fail loudly
     if not args.migrate_layout and not args.input:
         p.error("--input is required (except with --migrate-layout)")
+    stage_flags = "/".join(m.STAGE.flag for m in STAGE_MODULES)
+    active = [m for m in STAGE_MODULES if getattr(args, m.STAGE.name)]
+    if len(active) > 1:
+        p.error(f"{stage_flags} are separate passes; run them against "
+                "separate --output roots")
+    stage = active[0].STAGE if active else None
     if args.migrate_layout:
         if (
             args.watch or args.ocr_stage or args.compact or args.refresh_parts
             or args.export_zip or args.route_needs_ocr
-            or args.signals or args.curate or args.neardup or args.pack
-            or args.materialize
+            or stage is not None
             or args.rebuild
             or args.expire_older_than is not None
             or args.gc_orphans_older_than is not None
         ):
             p.error("--migrate-layout runs alone (offline upgrade, "
                     "no live writers)")
-        try:
-            from pdf_extractor_spark.spark.lineage import CommitLog
-        except ModuleNotFoundError:  # plain `python job.py` outside the root
-            import os as _os
-
-            sys.path.insert(
-                0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-            )
-            from pdf_extractor_spark.spark.lineage import CommitLog
-
         renamed = CommitLog.migrate_layout(args.output)
         print(f"LAYOUT_MIGRATED dirs={len(renamed)}")
         return 0
@@ -252,50 +260,37 @@ def main(argv: list[str] | None = None) -> int:
     ):
         p.error("--ocr-stage runs alone; maintenance/extraction flags "
                 "apply to stage-1 runs against the stage-1 --output")
-    if args.rebuild and not (
-        args.signals or args.curate or args.neardup or args.pack
-        or args.materialize
-    ):
-        p.error("--rebuild only applies to "
-                "--signals/--curate/--neardup/--pack/--materialize")
-    if args.over_kept is not None:
-        if not args.neardup:
-            p.error("--over-kept only applies to --neardup")
-        if not args.rebuild:
-            p.error("--over-kept re-decides a filtered corpus; it requires "
-                    "--rebuild (the accumulated band index does not "
-                    "describe the kept subset)")
-    if not args.curate and any(
-        v is not None
-        for v in (args.min_tokens, args.min_stopword_micros, args.accept_langs,
-                  args.min_logit_micros)
-    ):
-        p.error("--min-tokens/--min-stopword-micros/--accept-langs/"
-                "--min-logit-micros only apply to --curate")
-    if sum((args.signals, args.curate, args.neardup, args.pack,
-            args.materialize)) > 1:
-        p.error("--signals/--curate/--neardup/--pack/--materialize are "
-                "separate passes; run them against separate --output roots")
-    if args.materialize and not args.pack_table:
-        p.error("--materialize gathers a committed placement table; "
-                "pass --pack-table DIR")
-    if args.pack_table and not args.materialize:
-        p.error("--pack-table only applies to --materialize")
-    for flag, on in (("--signals", args.signals), ("--curate", args.curate),
-                     ("--neardup", args.neardup), ("--pack", args.pack),
-                     ("--materialize", args.materialize)):
-        if on and (
-            args.watch
-            or args.ocr_stage
-            or args.refresh_parts
-            or args.route_needs_ocr
-            or args.export_zip
-        ):
-            p.error(f"{flag} runs alone; extraction-mode flags apply "
-                    "to stage-1 runs against the stage-1 --output")
-        if on and args.input.startswith("synthetic:"):
-            p.error(f"{flag} reads a committed extraction table root, not "
-                    "synthetic: input")
+    if args.rebuild and stage is None:
+        p.error(f"--rebuild only applies to {stage_flags}")
+    for dest, owner in _STAGE_OF_OPTION.items():
+        export = dest in _EXPORT_OPTIONS
+        if given(dest) and owner is not stage and not (export and args.export_zip):
+            p.error(f"{_flag(dest)} only applies to {owner.flag}"
+                    + (" or --export-zip" if export else ""))
+    if stage is not None:
+        extraction = [_flag(d) for d in _EXTRACTION_ONLY if given(d)]
+        if extraction:
+            p.error(f"{stage.flag} runs alone; extraction-mode flags "
+                    f"({', '.join(extraction)}) apply to stage-1 runs "
+                    "against the stage-1 --output")
+        if args.input.startswith("synthetic:"):
+            p.error(f"{stage.flag} reads a committed extraction table root, "
+                    "not synthetic: input")
+        for dest in stage.required:
+            if not given(dest):
+                p.error(f"{stage.flag} requires {_flag(dest)}")
+        for dest in stage.rebuild_only:
+            if given(dest) and not args.rebuild:
+                p.error(f"{stage.flag} {_flag(dest)} decides over a corpus "
+                        "another table's verdicts define; it requires "
+                        "--rebuild (the stage's accumulated state does not "
+                        "describe that subset)")
+        if given("drop_neardups_from") and not given("kept_from"):
+            p.error(f"--drop-neardups-from composes the kept view's "
+                    f"flag-validity rule; with {stage.flag} it requires "
+                    "--kept-from")
+    if args.watch and args.input.startswith("synthetic:"):
+        p.error("--watch needs a drop directory, not synthetic: input")
     if args.route_needs_ocr and not args.watch:
         p.error("--route-needs-ocr requires --watch (the batch path has no "
                 "side-output router)")
@@ -317,19 +312,6 @@ def main(argv: list[str] | None = None) -> int:
                 "--ocr-stage")
     if args.with_ocr_text and not args.export_zip:
         p.error("--with-ocr-text only applies to --export-zip")
-    if args.kept_from and not (args.export_zip or args.pack):
-        p.error("--kept-from only applies to --export-zip or --pack")
-    if args.drop_neardups_from and not (args.export_zip or args.pack):
-        p.error("--drop-neardups-from only applies to --export-zip or --pack")
-    if args.pack and args.kept_from and not args.rebuild:
-        p.error("--pack --kept-from packs a corpus another table's verdicts "
-                "define; it requires --rebuild (no stable incremental "
-                "notion of 'the kept docs of this window')")
-    if args.cost is not None and not args.pack:
-        p.error("--cost only applies to --pack")
-    if args.pack and args.drop_neardups_from and not args.kept_from:
-        p.error("--drop-neardups-from composes the kept view's "
-                "flag-validity rule; with --pack it requires --kept-from")
     if args.shards is not None:
         if not args.export_zip:
             p.error("--shards only applies to --export-zip")
@@ -349,21 +331,16 @@ def main(argv: list[str] | None = None) -> int:
     # CommitLog there, so a --kept-from typo would export 0 docs and a
     # --drop-neardups-from typo would ship every near-duplicate, both with
     # exit 0 (review finding).
-    import os as _os
-
     def _require_table_root(opt: str, root: str) -> None:
-        if not _os.path.isdir(_os.path.join(root, "commits")):
+        if not os.path.isdir(os.path.join(root, "commits")):
             p.error(f"{opt} {root} is not a committed table root "
                     "(no commits/ directory)")
 
-    if (args.signals or args.curate or args.neardup or args.pack
-            or args.materialize):
-        flag = ("--signals" if args.signals else "--curate" if args.curate
-                else "--neardup" if args.neardup else "--pack" if args.pack
-                else "--materialize")
-        _require_table_root(f"{flag} --input", args.input)
-    if args.pack_table is not None:
-        _require_table_root("--pack-table", args.pack_table)
+    if stage is not None:
+        _require_table_root(f"{stage.flag} --input", args.input)
+    for dest in ("pack_table", "over_kept", "kept_from", "drop_neardups_from"):
+        if given(dest):
+            _require_table_root(_flag(dest), getattr(args, dest))
     pw_manifest_delim = None
     if args.password_manifest is not None:
         # validated PRE-JVM like the table roots: a typo'd manifest must
@@ -377,7 +354,7 @@ def main(argv: list[str] | None = None) -> int:
             sniff_delimiter,
         )
 
-        if not _os.path.isfile(args.password_manifest):
+        if not os.path.isfile(args.password_manifest):
             p.error(f"--password-manifest {args.password_manifest} "
                     "does not exist")
         pw_manifest_delim = sniff_delimiter(args.password_manifest)
@@ -387,27 +364,12 @@ def main(argv: list[str] | None = None) -> int:
                 "--password-manifest needs header columns "
                 f"doc_id,password; got {pw_header}"
             )
-    if args.over_kept is not None:
-        _require_table_root("--over-kept", args.over_kept)
-    if args.kept_from is not None:
-        _require_table_root("--kept-from", args.kept_from)
-    if args.drop_neardups_from is not None:
-        _require_table_root("--drop-neardups-from", args.drop_neardups_from)
 
     from pdf_extractor_spark.spark.session import get_spark
-    from pdf_extractor_spark.spark.lineage import (
-        CommitLog,
-        RunReport,
-        compact_chunks,
-        reextract_parts,
-        run_extraction,
-    )
 
     if args.ocr_stage:
         # everything up to the stream itself is Spark-free: validate the
         # typo'd-path case and heal the queue BEFORE paying JVM startup
-        import os as _os
-
         from pdf_extractor_spark.streaming.ingest import (
             maintain_ocr_queue,
             queue_root_for,
@@ -418,9 +380,9 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         queue_root = queue_root_for(args.input)
-        out_dir = _os.path.join(args.output, OCR_TEXT_DIRNAME)
-        ckpt = args.checkpoint or _os.path.join(args.output, "_checkpoint")
-        if not _os.path.isdir(_os.path.join(args.input, "commits")):
+        out_dir = os.path.join(args.output, OCR_TEXT_DIRNAME)
+        ckpt = args.checkpoint or os.path.join(args.output, "_checkpoint")
+        if not os.path.isdir(os.path.join(args.input, "commits")):
             p.error(f"--ocr-stage --input {args.input} is not a stage-1 "
                     "table root (no commits/ directory)")
         # heal the commit->publish crash window BEFORE consuming: a stage-1
@@ -456,149 +418,42 @@ def main(argv: list[str] | None = None) -> int:
 
         configure_state_store(spark, args.state_store)
     try:
-        if (args.signals or args.curate or args.neardup or args.pack
-                or args.materialize):
-            # table roots already validated pre-JVM (above)
-            if args.signals:
-                from pdf_extractor_spark.spark.signals import run_signals_job
-
-                report, dt = run_signals_job(
-                    spark, args.input, args.output, rebuild=args.rebuild
-                )
-                verb = "SIGNALS_DONE"
-            elif args.neardup:
-                from pdf_extractor_spark.spark.neardup import run_neardup_job
-
-                report, dt = run_neardup_job(
-                    spark,
-                    args.input,
-                    args.output,
-                    rebuild=args.rebuild,
-                    kept_from=args.over_kept,
-                )
-                verb = "NEARDUP_DONE"
-            elif args.materialize:
-                from pdf_extractor_spark.spark.materialize import (
-                    run_materialize_job,
-                )
-
-                report, dt = run_materialize_job(
-                    spark,
-                    args.input,
-                    args.pack_table,
-                    args.output,
-                    rebuild=args.rebuild,
-                )
-                verb = "MATERIALIZE_DONE"
-            elif args.pack:
-                from pdf_extractor_spark.spark.pack import run_pack_job
-
-                report, dt = run_pack_job(
-                    spark,
-                    args.input,
-                    args.output,
-                    rebuild=args.rebuild,
-                    kept_from=args.kept_from,
-                    neardup_from=args.drop_neardups_from,
-                    cost=args.cost or "ws",
-                )
-                verb = "PACK_DONE"
-            else:
-                from pdf_extractor_spark.spark.curate import (
-                    GateConfig,
-                    run_curate_job,
-                )
-
-                defaults = GateConfig()
-                if args.accept_langs is None:
-                    langs = None
-                elif args.accept_langs.strip().lower() == "any":
-                    langs = GateConfig.any_language()
-                else:
-                    langs = tuple(
-                        s.strip() for s in args.accept_langs.split(",") if s.strip()
-                    )
-                gates = GateConfig(
-                    min_tokens=(
-                        defaults.min_tokens if args.min_tokens is None
-                        else args.min_tokens
-                    ),
-                    min_stopword_micros=(
-                        defaults.min_stopword_micros
-                        if args.min_stopword_micros is None
-                        else args.min_stopword_micros
-                    ),
-                    accept_langs=langs,
-                    min_logit_micros=args.min_logit_micros,
-                )
-                report, dt = run_curate_job(
-                    spark, args.input, args.output, rebuild=args.rebuild,
-                    gates=gates,
-                )
-                verb = "CURATE_DONE"
+        if stage is not None:
+            # looked up at call time, not bound at import, so whatever the
+            # module holds under this name when the run starts is what runs
+            run = getattr(active[0], f"run_{stage.name}_job")
+            report, dt = run(
+                spark, args.input, args.output, rebuild=args.rebuild,
+                **{d: getattr(args, d) for d in stage.options},
+            )
             print(
-                f"{verb} chunks={report.chunks_committed} "
+                f"{stage.verb} chunks={report.chunks_committed} "
                 f"parts={report.parts_processed} docs={report.docs_processed} "
                 f"wall_s={dt:.2f}"
                 + (" (rebuild)" if args.rebuild else "")
             )
+            log = CommitLog(args.output)
             if args.compact:
                 # derived tables accrete one chunk per incremental window
                 # (the same small-file problem as stage-1 ingest) —
                 # compact the STAGE OUTPUT table under its own schema; the
                 # cursor survives (markers kept; compaction markers carry
                 # no src_snapshot and are window-excluded)
-                from pdf_extractor_spark.spark.lineage import compact_chunks
-
-                if args.signals:
-                    from pdf_extractor_spark.spark.signals import (
-                        SIGNALS_SCHEMA as _sch,
-                    )
-                elif args.curate:
-                    from pdf_extractor_spark.spark.curate import (
-                        CURATED_SCHEMA as _sch,
-                    )
-                elif args.neardup:
-                    from pdf_extractor_spark.spark.neardup import (
-                        NEARDUP_SCHEMA as _sch,
-                    )
-                elif args.pack:
-                    from pdf_extractor_spark.spark.pack import (
-                        PACKED_SCHEMA as _sch,
-                    )
-                else:
-                    from pdf_extractor_spark.spark.materialize import (
-                        MATERIALIZED_SCHEMA as _sch,
-                    )
-                new_id = compact_chunks(
-                    spark, CommitLog(args.output), schema=_sch
-                )
+                new_id = compact_chunks(spark, log, schema=stage.schema)
                 print(f"COMPACTED chunk={new_id}"
                       if new_id is not None else "COMPACTED nothing-to-do")
-            # retention/GC compose with stage tables the same way they do
-            # with the stage-1 table: both are pure CommitLog filesystem
-            # maintenance, schema-independent, markers always kept
-            if args.expire_older_than is not None:
-                gone = CommitLog(args.output).expire_snapshots(
-                    older_than=time.time() - args.expire_older_than
-                )
-                print(f"SNAPSHOTS_EXPIRED chunks={gone}")
-            if args.gc_orphans_older_than is not None:
-                swept = CommitLog(args.output).gc_orphans(
-                    grace_s=args.gc_orphans_older_than
-                )
-                print(f"ORPHANS_REMOVED dirs={len(swept)}")
+            _expire_and_gc(log, args)
             return 0
         if args.ocr_stage:
             t0 = time.monotonic()
             n = 0
-            has_chunks = _os.path.isdir(queue_root) and any(
-                name.startswith("chunk-") for name in _os.listdir(queue_root)
+            has_chunks = os.path.isdir(queue_root) and any(
+                name.startswith("chunk-") for name in os.listdir(queue_root)
             )
             if has_chunks:
                 q = start_ocr_stage(spark, queue_root, out_dir, ckpt)
                 q.awaitTermination()
-            if _os.path.isdir(out_dir):
+            if os.path.isdir(out_dir):
                 # always report the TABLE total (not this run's delta): a
                 # wrong --input or empty queue is then visibly different
                 # from a drained pipeline with prior output
@@ -609,16 +464,12 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 0
         if args.watch:
-            import os as _os
-
             from pdf_extractor_spark.streaming.ingest import (
                 start_extraction_stream,
             )
 
-            if args.input.startswith("synthetic:"):
-                p.error("--watch needs a drop directory, not synthetic: input")
             log = CommitLog(args.output)
-            ckpt = args.checkpoint or _os.path.join(args.output, "_checkpoint")
+            ckpt = args.checkpoint or os.path.join(args.output, "_checkpoint")
             before = {c["chunk_id"] for c in log.committed_chunks()}
             t0 = time.monotonic()
             if args.input_format == "auto":
@@ -645,7 +496,7 @@ def main(argv: list[str] | None = None) -> int:
             # the checkpoint realpath): a concurrent writer appending to
             # the same table root during the drain must not inflate the
             # report (ADVICE r03)
-            ns = _os.path.realpath(ckpt)
+            ns = os.path.realpath(ckpt)
             new = [
                 c
                 for c in log.committed_chunks()
@@ -731,12 +582,7 @@ def main(argv: list[str] | None = None) -> int:
             new_id = compact_chunks(spark, log)
             reclaimed = log.expire_replaced() if new_id is not None else []
             print(f"COMPACTION_DONE chunk={new_id} reclaimed={len(reclaimed)}")
-        if args.expire_older_than is not None:
-            gone = log.expire_snapshots(older_than=time.time() - args.expire_older_than)
-            print(f"SNAPSHOTS_EXPIRED chunks={gone}")
-        if args.gc_orphans_older_than is not None:
-            swept = log.gc_orphans(grace_s=args.gc_orphans_older_than)
-            print(f"ORPHANS_REMOVED dirs={len(swept)}")
+        _expire_and_gc(log, args)
         if args.export_zip:
             # ANY --shards value (1 included) means the directory layout:
             # routing --shards 1 to the single-zip writer would os.replace

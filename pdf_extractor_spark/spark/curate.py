@@ -44,7 +44,6 @@ the join key is the same digest the window just shuffled on.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -57,7 +56,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .derived import run_derived_stage
+from .derived import Stage, latest_metric, run_derived_stage, timed
 from .lineage import CommitLog, RunReport
 from .signals import compute_signals
 
@@ -112,6 +111,35 @@ class GateConfig:
 
         return (*_PRIORITY, "unknown")
 
+    @classmethod
+    def from_options(
+        cls,
+        min_tokens: int | None = None,
+        min_stopword_micros: int | None = None,
+        accept_langs: str | None = None,
+        min_logit_micros: int | None = None,
+    ) -> GateConfig:
+        """The config the ``--curate`` options spell: None keeps a
+        default; ``accept_langs`` is the comma-separated CLI form, or
+        ``any`` for :meth:`any_language`."""
+        if accept_langs is None:
+            langs = None
+        elif accept_langs.strip().lower() == "any":
+            langs = cls.any_language()
+        else:
+            langs = tuple(s.strip() for s in accept_langs.split(",") if s.strip())
+        return cls(
+            min_tokens=MIN_TOKENS if min_tokens is None else min_tokens,
+            min_stopword_micros=(
+                MIN_STOPWORD_MICROS
+                if min_stopword_micros is None
+                else min_stopword_micros
+            ),
+            accept_langs=langs,
+            min_logit_micros=min_logit_micros,
+        )
+
+
 CURATED_SCHEMA = StructType(
     [
         StructField("doc_id", StringType(), False),
@@ -123,6 +151,17 @@ CURATED_SCHEMA = StructType(
         StructField("dup_of", StringType()),  # null unless reason='duplicate'
         StructField("part_id", IntegerType()),
     ]
+)
+
+STAGE = Stage(
+    "curate",
+    CURATED_SCHEMA,
+    help="run the curation-verdict pass instead of extraction: --input is a "
+    "committed extraction table root, --output receives the verdict table "
+    "(gates + exact dedup against the accumulated kept-digest index; "
+    "incremental and exactly-once like --signals)",
+    options=("min_tokens", "min_stopword_micros", "accept_langs",
+             "min_logit_micros"),
 )
 
 
@@ -232,8 +271,6 @@ def compute_verdicts(
 def table_gates(out_log: CommitLog) -> dict | None:
     """Gate config the table's verdicts were decided under (latest
     committed chunk's record — rebuilds may legitimately change it)."""
-    from .derived import latest_metric
-
     return latest_metric(out_log.committed_chunks(), "gates")
 
 
@@ -255,18 +292,17 @@ def run_curate(
             "(job.py --curate --rebuild) to re-verdict everything"
         )
 
-    def _incremental(delta: DataFrame) -> DataFrame:
+    def _incremental(delta: DataFrame, _horizon: int) -> DataFrame:
         return compute_verdicts(delta, kept_digest_index(spark, out_log), g)
 
-    def _rebuild(full: DataFrame) -> DataFrame:
+    def _rebuild(full: DataFrame, _horizon: int) -> DataFrame:
         return compute_verdicts(full, None, g)
 
     return run_derived_stage(
         spark,
         src_log,
         out_log,
-        CURATED_SCHEMA,
-        "curate",
+        STAGE,
         _incremental,
         rebuild=rebuild,
         rebuild_compute=_rebuild,
@@ -360,14 +396,9 @@ def run_curate_job(
     src_root: str,
     out_root: str,
     rebuild: bool = False,
-    gates: GateConfig | None = None,
+    **gate_options,
 ) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_curate(
-        spark,
-        CommitLog(src_root),
-        CommitLog(out_root),
-        rebuild=rebuild,
-        gates=gates,
-    )
-    return report, time.monotonic() - t0
+    """``gate_options``: the ``--curate`` options by dest (see
+    :meth:`GateConfig.from_options`)."""
+    return timed(run_curate, spark, CommitLog(src_root), CommitLog(out_root),
+                 rebuild=rebuild, gates=GateConfig.from_options(**gate_options))

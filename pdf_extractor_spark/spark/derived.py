@@ -1,13 +1,15 @@
 """Shared incremental consumer loop for DERIVED tables over a CommitLog.
 
-Every post-extraction stage (signals, curation verdicts, ...) has the same
-shape: read the SOURCE snapshots committed since this stage's cursor,
-compute a per-document projection/verdict over exactly that delta, and
-commit the result as one chunk of the stage's OWN CommitLog table — with
-the consumed source snapshot recorded in the marker (``metrics.
-src_snapshot``) so the cursor survives crashes for free. This module is
-that loop, factored once; ``spark/signals.py`` and ``spark/curate.py`` are
-instances.
+Every post-extraction stage has the same shape: read the SOURCE snapshots
+committed since this stage's cursor, compute a per-document
+projection/verdict over exactly that delta, and commit the result as one
+chunk of the stage's OWN CommitLog table — with the consumed source
+snapshot recorded in the marker (``metrics.src_snapshot``) so the cursor
+survives crashes for free. This module is that loop, factored once, plus
+the :class:`Stage` record each stage module exports as ``STAGE``; the five
+instances are ``spark/signals.py``, ``curate.py``, ``neardup.py``,
+``pack.py`` and ``materialize.py``, and ``job.py`` drives all of them
+through that one table.
 
 Semantics pinned here (stage modules inherit them):
 
@@ -38,12 +40,50 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .lineage import CommitLog, RunReport, _chunk_dirname
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One derived stage as ``job.py`` drives it.
+
+    ``name`` is the CLI flag (``--<name>``), the marker's ``stage`` and the
+    ``<NAME>_DONE`` report verb; ``schema`` is the output row shape
+    (``--compact`` rewrites the stage table under it). ``options`` are the
+    argparse dests only this stage consumes — ``job.py`` refuses them
+    without the stage and passes them by name to the module's
+    ``run_<name>_job``. ``required`` options must accompany the stage;
+    ``rebuild_only`` options re-scope the corpus the stage decides over,
+    which its accumulated incremental state does not describe, so they
+    need ``--rebuild``."""
+
+    name: str
+    schema: StructType
+    help: str
+    options: tuple[str, ...] = ()
+    required: tuple[str, ...] = ()
+    rebuild_only: tuple[str, ...] = ()
+
+    @property
+    def flag(self) -> str:
+        return f"--{self.name}"
+
+    @property
+    def verb(self) -> str:
+        return f"{self.name.upper()}_DONE"
+
+
+def timed(run: Callable[..., RunReport], *args, **kwargs) -> tuple[RunReport, float]:
+    """``run(*args, **kwargs)`` and its wall seconds: the
+    ``(RunReport, seconds)`` every ``run_<stage>_job`` returns."""
+    t0 = time.monotonic()
+    return run(*args, **kwargs), time.monotonic() - t0
 
 
 def latest_metric(markers: list[dict], key: str):
@@ -59,6 +99,13 @@ def latest_metric(markers: list[dict], key: str):
         if v is not None:
             out = v
     return out
+
+
+def table_scope(out_log: CommitLog) -> str | None:
+    """Corpus scope a neardup or pack table was decided over ('full' |
+    'kept'; latest committed chunk's record — rebuilds may change it).
+    None on an empty or pre-scope table (implicitly 'full')."""
+    return latest_metric(out_log.committed_chunks(), "scope")
 
 
 def _cursor_of(markers: list[dict]) -> int | None:
@@ -119,18 +166,17 @@ def run_derived_stage(
     spark: SparkSession,
     src_log: CommitLog,
     out_log: CommitLog,
-    schema: StructType,
-    stage: str,
-    compute: Callable[[DataFrame], DataFrame],
+    stage: Stage,
+    compute: Callable[[DataFrame, int], DataFrame],
     rebuild: bool = False,
-    rebuild_compute: Callable[[DataFrame], DataFrame] | None = None,
+    rebuild_compute: Callable[[DataFrame, int], DataFrame] | None = None,
     extra_metrics: dict | None = None,
     src_schema: StructType | None = None,
     rebuild_all_parts: bool = False,
 ) -> RunReport:
     """One incremental pass of a derived stage: consume the source
     snapshots committed since the cursor, or (``rebuild=True``) recompute
-    everything as one overwrite chunk.
+    everything as one overwrite chunk of ``stage.schema`` rows.
 
     ``src_schema`` names the SOURCE table's row shape when the source is
     itself a derived table (materialize consumes the pack table); default
@@ -151,14 +197,13 @@ def run_derived_stage(
     stage whose incremental path consults its own prior output (e.g.
     curate's kept-digest index) passes a self-contained variant here.
 
-    Either callable may declare a parameter NAMED ``horizon`` to receive
-    the window horizon (the source snapshot id this run consumes up to —
-    the same value the marker records as ``src_snapshot``): a stage whose
-    output rows must carry a window tag (e.g. pack's ``pack_epoch``)
-    takes it here rather than re-listing the source itself, which would
-    race a concurrent source commit and tag rows with a horizon the
-    marker does not record. Opt-in is BY NAME, not arity — stage computes
-    may carry unrelated optional parameters (signals' ``extra``).
+    Both are called as ``fn(df, horizon)``: the horizon is the source
+    snapshot id this run consumes up to — the same value the marker
+    records as ``src_snapshot``. A stage whose output rows must carry a
+    window tag (e.g. pack's ``pack_epoch``) takes it here rather than
+    re-listing the source itself, which would race a concurrent source
+    commit and tag rows with a horizon the marker does not record; the
+    other stages ignore it.
 
     Frames a stage's compute persists via ``ops/dedup._persisted``
     (neardup's shingle/candidate tables, pack's sharded prefix-sum frame)
@@ -172,173 +217,118 @@ def run_derived_stage(
 
     mark = len(_DF_CACHE)
     try:
-        return _run_derived_stage(
+        src_chunks = src_log.committed_chunks()  # commit order; reused below
+        if not src_chunks:
+            return RunReport(0, 0, 0, 0)
+        latest = src_chunks[-1]["chunk_id"]
+        n_parts = src_log.n_parts(chunks=src_chunks)
+
+        if rebuild:
+            # markers=src_chunks pins the read to the SAME snapshot `latest`
+            # names: a source chunk committed between the listing above and
+            # the read would otherwise be folded into the rebuild output but
+            # not into the recorded cursor, so the next incremental run
+            # would consume it AGAIN — two derived rows per doc, and the
+            # earlier rebuild overwrite cannot shadow the later duplicate
+            # append
+            src_full = (
+                src_log.read_extracted(spark, markers=src_chunks)
+                if src_schema is None
+                else src_log.read_table(spark, src_schema, markers=src_chunks)
+            )
+            out = (rebuild_compute or compute)(src_full, latest)
+            all_parts = (
+                list(range(n_parts))
+                if rebuild_all_parts and n_parts is not None
+                else sorted({p for c in src_chunks for p in c["part_ids"]})
+            )
+            _, n_docs, _ = commit_derived_chunk(
+                spark,
+                out_log,
+                out,
+                stage.schema,
+                stage.name,
+                all_parts,
+                {**(extra_metrics or {}), "src_snapshot": latest,
+                 "rebuild": True},
+                n_parts,
+                overwrite=True,
+            )
+            return RunReport(1, len(all_parts), n_docs, 0)
+
+        cursor = derived_cursor(out_log)
+        if cursor == latest:
+            return RunReport(0, 0, 0, 0)
+        # THE window definition lives on CommitLog (shared with the scan that
+        # reads it, so the overwrite guard below can never drift from what
+        # read_incremental actually returns). The horizon is pinned by
+        # chunks=src_chunks — ONE marker listing feeds `latest`, the window,
+        # and the read, so a source chunk committing mid-run can appear in
+        # none of them or all of them, never a mix.
+        window = src_log.incremental_window(cursor, chunks=src_chunks)
+        if not window:
+            return RunReport(0, 0, 0, 0)
+        if any(c.get("overwrite") for c in window):
+            raise ValueError(
+                "source window contains a partition overwrite; an "
+                "append-shaped delta would strand the untouched docs of the "
+                "overwritten parts — run with rebuild=True "
+                f"(job.py --{stage.name} --rebuild)"
+            )
+        # a compaction + expire_replaced while this stage lagged deletes the
+        # window chunks' DATA while their markers survive — the chunk-pruned
+        # scan would then silently read EMPTY and the cursor would advance
+        # past the lost history (the same silent-empty class the
+        # legacy-layout guard catches); existence-check the bytes the
+        # window promises
+        reclaimed = [
+            c["chunk_id"]
+            for c in window
+            if not os.path.isdir(
+                os.path.join(src_log.data_dir, _chunk_dirname(c["chunk_id"]))
+            )
+        ]
+        if reclaimed:
+            raise ValueError(
+                f"source chunks {reclaimed} in the incremental window have "
+                "no data on disk (compacted and expired while this stage "
+                "lagged); the delta cannot be reconstructed incrementally — "
+                f"run with rebuild=True (job.py --{stage.name} --rebuild)"
+            )
+        delta = src_log.read_incremental(
             spark,
-            src_log,
-            out_log,
-            schema,
-            stage,
-            compute,
-            rebuild=rebuild,
-            rebuild_compute=rebuild_compute,
-            extra_metrics=extra_metrics,
-            src_schema=src_schema,
-            rebuild_all_parts=rebuild_all_parts,
+            after=cursor if cursor is not None else -1,
+            window=window,
+            schema=src_schema,
         )
-    finally:
-        while len(_DF_CACHE) > mark:
-            _DF_CACHE.pop().unpersist()
+        out = compute(delta, latest)
 
+        def _cursor_unmoved(committed: list[dict]) -> None:
+            # optimistic concurrency, checked under the commit lock: a rival
+            # run of this stage that committed since we read the cursor has
+            # already consumed (some prefix of) this window — publishing
+            # ours too would duplicate every doc's derived row
+            from .lineage import CommitConflict
 
-def _run_derived_stage(
-    spark: SparkSession,
-    src_log: CommitLog,
-    out_log: CommitLog,
-    schema: StructType,
-    stage: str,
-    compute: Callable[[DataFrame], DataFrame],
-    rebuild: bool = False,
-    rebuild_compute: Callable[[DataFrame], DataFrame] | None = None,
-    extra_metrics: dict | None = None,
-    src_schema: StructType | None = None,
-    rebuild_all_parts: bool = False,
-) -> RunReport:
-    import inspect
+            now = _cursor_of(committed)
+            if now != cursor:
+                raise CommitConflict(
+                    f"stage {stage.name} cursor moved {cursor} -> {now} "
+                    "under a concurrent run; not publishing a duplicate window"
+                )
 
-    def _call(fn: Callable, df: DataFrame, horizon: int) -> DataFrame:
-        if "horizon" in inspect.signature(fn).parameters:
-            return fn(df, horizon=horizon)
-        return fn(df)
-
-    src_chunks = src_log.committed_chunks()  # commit order; reused below
-    if not src_chunks:
-        return RunReport(0, 0, 0, 0)
-    latest = src_chunks[-1]["chunk_id"]
-    n_parts = src_log.n_parts(chunks=src_chunks)
-
-    if rebuild:
-        # markers=src_chunks pins the read to the SAME snapshot `latest`
-        # names: a source chunk committed between the listing above and the
-        # read would otherwise be folded into the rebuild output but not
-        # into the recorded cursor, so the next incremental run would
-        # consume it AGAIN — two derived rows per doc, and the earlier
-        # rebuild overwrite cannot shadow the later duplicate append
-        src_full = (
-            src_log.read_extracted(spark, markers=src_chunks)
-            if src_schema is None
-            else src_log.read_table(spark, src_schema, markers=src_chunks)
-        )
-        out = _call(rebuild_compute or compute, src_full, latest)
-        all_parts = (
-            list(range(n_parts))
-            if rebuild_all_parts and n_parts is not None
-            else sorted({p for c in src_chunks for p in c["part_ids"]})
-        )
-        _, n_docs, _ = commit_derived_chunk(
+        _, n_docs, touched = commit_derived_chunk(
             spark,
             out_log,
             out,
-            schema,
-            stage,
-            all_parts,
-            {**(extra_metrics or {}), "src_snapshot": latest, "rebuild": True},
+            stage.schema,
+            stage.name,
+            None,
+            {**(extra_metrics or {}), "src_snapshot": latest},
             n_parts,
-            overwrite=True,
+            validate=_cursor_unmoved,
         )
-        return RunReport(1, len(all_parts), n_docs, 0)
-
-    cursor = derived_cursor(out_log)
-    if cursor == latest:
-        return RunReport(0, 0, 0, 0)
-    # THE window definition lives on CommitLog (shared with the scan that
-    # reads it, so the overwrite guard below can never drift from what
-    # read_incremental actually returns). The horizon is pinned by
-    # chunks=src_chunks — ONE marker listing feeds `latest`, the window,
-    # and the read, so a source chunk committing mid-run can appear in
-    # none of them or all of them, never a mix.
-    window = src_log.incremental_window(cursor, chunks=src_chunks)
-    if not window:
-        return RunReport(0, 0, 0, 0)
-    if any(c.get("overwrite") for c in window):
-        raise ValueError(
-            "source window contains a partition overwrite; an append-shaped "
-            "delta would strand the untouched docs of the overwritten parts "
-            f"— run with rebuild=True (job.py --{stage} --rebuild)"
-        )
-    # a compaction + expire_replaced while this stage lagged deletes the
-    # window chunks' DATA while their markers survive — the chunk-pruned
-    # scan would then silently read EMPTY and the cursor would advance past
-    # the lost history (the same silent-empty class the legacy-layout guard
-    # catches); existence-check the bytes the window promises
-    reclaimed = [
-        c["chunk_id"]
-        for c in window
-        if not os.path.isdir(
-            os.path.join(src_log.data_dir, _chunk_dirname(c["chunk_id"]))
-        )
-    ]
-    if reclaimed:
-        raise ValueError(
-            f"source chunks {reclaimed} in the incremental window have no "
-            "data on disk (compacted and expired while this stage lagged); "
-            "the delta cannot be reconstructed incrementally — run with "
-            f"rebuild=True (job.py --{stage} --rebuild)"
-        )
-    delta = src_log.read_incremental(
-        spark,
-        after=cursor if cursor is not None else -1,
-        window=window,
-        schema=src_schema,
-    )
-    out = _call(compute, delta, latest)
-
-    def _cursor_unmoved(committed: list[dict]) -> None:
-        # optimistic concurrency, checked under the commit lock: a rival
-        # run of this stage that committed since we read the cursor has
-        # already consumed (some prefix of) this window — publishing ours
-        # too would duplicate every doc's derived row
-        from .lineage import CommitConflict
-
-        now = _cursor_of(committed)
-        if now != cursor:
-            raise CommitConflict(
-                f"stage {stage} cursor moved {cursor} -> {now} under a "
-                "concurrent run; not publishing a duplicate window"
-            )
-
-    _, n_docs, touched = commit_derived_chunk(
-        spark,
-        out_log,
-        out,
-        schema,
-        stage,
-        None,
-        {**(extra_metrics or {}), "src_snapshot": latest},
-        n_parts,
-        validate=_cursor_unmoved,
-    )
-    return RunReport(1, len(touched), n_docs, 0)
-
-
-def run_derived_job(
-    spark: SparkSession,
-    src_root: str,
-    out_root: str,
-    schema: StructType,
-    stage: str,
-    compute,
-    rebuild: bool = False,
-    rebuild_compute=None,
-) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_derived_stage(
-        spark,
-        CommitLog(src_root),
-        CommitLog(out_root),
-        schema,
-        stage,
-        compute,
-        rebuild=rebuild,
-        rebuild_compute=rebuild_compute,
-    )
-    return report, time.monotonic() - t0
+        return RunReport(1, len(touched), n_docs, 0)
+    finally:
+        while len(_DF_CACHE) > mark:
+            _DF_CACHE.pop().unpersist()

@@ -49,8 +49,6 @@ placements.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -63,7 +61,7 @@ from pyspark.sql.types import (
 
 from ..ops.portable import tokens
 from ..ops.training import CTX_TOKENS
-from .derived import run_derived_stage
+from .derived import Stage, run_derived_stage, timed
 from .lineage import CommitLog, RunReport
 from .pack import PACKED_SCHEMA
 from .signals import signal_text
@@ -80,6 +78,19 @@ MATERIALIZED_SCHEMA = StructType(
         StructField("text", StringType(), False),
         StructField("part_id", IntegerType()),
     ]
+)
+
+STAGE = Stage(
+    "materialize",
+    MATERIALIZED_SCHEMA,
+    help="run the shard-materialization pass instead of extraction: --input "
+    "is a committed extraction table root, --pack-table the committed "
+    "placement table a prior --pack run produced over it, --output "
+    "receives the assembled (pack_epoch, ctx, text) context rows "
+    "(snapshot-pinned gather join; incremental and exactly-once like "
+    "--signals)",
+    options=("pack_table",),
+    required=("pack_table",),
 )
 
 
@@ -230,7 +241,7 @@ def run_materialize(
             "cannot reconstruct the piece stream its offsets index"
         )
 
-    def _compute(placements: DataFrame) -> DataFrame:
+    def _compute(placements: DataFrame, _horizon: int) -> DataFrame:
         # the gather slices the SAME stream the placements were costed
         # against: word arrays for 'ws', the recorded-rules piece stream
         # for 'bpe' — a mismatched gather would assemble wrong slices
@@ -243,8 +254,7 @@ def run_materialize(
         spark,
         pack_log,
         out_log,
-        MATERIALIZED_SCHEMA,
-        "materialize",
+        STAGE,
         _compute,
         rebuild=rebuild,
         src_schema=PACKED_SCHEMA,
@@ -262,17 +272,15 @@ def read_materialized(
 
 def run_materialize_job(
     spark: SparkSession,
-    extract_root: str,
-    pack_root: str,
+    src_root: str,
     out_root: str,
     rebuild: bool = False,
+    *,
+    pack_table: str,
 ) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_materialize(
-        spark,
-        CommitLog(extract_root),
-        CommitLog(pack_root),
-        CommitLog(out_root),
-        rebuild=rebuild,
+    """``src_root`` is the extraction table the ``pack_table`` placements
+    index; the placements are the stage's incremental source."""
+    return timed(
+        run_materialize, spark, CommitLog(src_root), CommitLog(pack_table),
+        CommitLog(out_root), rebuild=rebuild,
     )
-    return report, time.monotonic() - t0

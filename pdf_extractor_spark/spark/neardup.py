@@ -54,8 +54,6 @@ doc — the only state the stage carries forward.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -75,7 +73,7 @@ from ..ops.dedup import (
     jaccard_ppb_for_pairs,
     shingles,
 )
-from .derived import run_derived_stage
+from .derived import Stage, derived_cursor, run_derived_stage, table_scope, timed
 from .lineage import CommitLog, RunReport
 from .signals import signal_text
 
@@ -91,6 +89,18 @@ NEARDUP_SCHEMA = StructType(
         StructField("jaccard_ppb", LongType()),  # null iff dup_of is null
         StructField("part_id", IntegerType()),
     ]
+)
+
+STAGE = Stage(
+    "neardup",
+    NEARDUP_SCHEMA,
+    help="run the near-duplicate pass instead of extraction: --input is a "
+    "committed extraction table root, --output receives per-doc LSH band "
+    "fingerprints + verified dup_of verdicts (banded MinHash candidates "
+    "checked against the batch AND the accumulated band index, "
+    "exact-Jaccard verified; incremental and exactly-once like --signals)",
+    options=("over_kept",),
+    rebuild_only=("over_kept",),
 )
 
 
@@ -220,15 +230,6 @@ def compute_neardup(
     )
 
 
-def table_scope(out_log: CommitLog) -> str | None:
-    """Corpus scope this table's verdicts were decided over ('full' |
-    'kept'; latest committed chunk's record — rebuilds may change it).
-    None on an empty or pre-scope table (implicitly 'full')."""
-    from .derived import latest_metric
-
-    return latest_metric(out_log.committed_chunks(), "scope")
-
-
 def run_neardup(
     spark: SparkSession,
     src_log: CommitLog,
@@ -252,9 +253,7 @@ def run_neardup(
             "re-decide the table under the new scope"
         )
 
-    def _incremental(delta: DataFrame) -> DataFrame:
-        from .derived import derived_cursor
-
+    def _incremental(delta: DataFrame, _horizon: int) -> DataFrame:
         # cursor re-read here can only differ from the stage's own if a
         # rival run committed in between — whose publish-time validate
         # hook (CommitConflict) then aborts ours anyway
@@ -266,7 +265,7 @@ def run_neardup(
             src_as_of=derived_cursor(out_log),
         )
 
-    def _rebuild(full: DataFrame) -> DataFrame:
+    def _rebuild(full: DataFrame, _horizon: int) -> DataFrame:
         if kept_from is not None:
             from .curate import read_curated
 
@@ -282,8 +281,7 @@ def run_neardup(
         spark,
         src_log,
         out_log,
-        NEARDUP_SCHEMA,
-        "neardup",
+        STAGE,
         _incremental,
         rebuild=rebuild,
         rebuild_compute=_rebuild,
@@ -305,14 +303,12 @@ def run_neardup_job(
     src_root: str,
     out_root: str,
     rebuild: bool = False,
-    kept_from: str | None = None,
+    over_kept: str | None = None,
 ) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_neardup(
-        spark,
-        CommitLog(src_root),
-        CommitLog(out_root),
+    """``over_kept``: a curate table root scoping the run to its kept
+    corpus (``run_neardup``'s ``kept_from``)."""
+    return timed(
+        run_neardup, spark, CommitLog(src_root), CommitLog(out_root),
         rebuild=rebuild,
-        kept_from=None if kept_from is None else CommitLog(kept_from),
+        kept_from=None if over_kept is None else CommitLog(over_kept),
     )
-    return report, time.monotonic() - t0

@@ -52,15 +52,13 @@ framing.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from ..ops.portable import h64, tokens
 from ..ops.training import CTX_TOKENS, PACK_SHARDS_DIV, exclusive_prefix_sum
-from .derived import run_derived_stage
+from .derived import Stage, latest_metric, run_derived_stage, table_scope, timed
 from .lineage import CommitLog, RunReport
 from .signals import signal_text
 
@@ -78,6 +76,19 @@ PACKED_SCHEMA = StructType(
         StructField("n_chunks", LongType(), False),
         StructField("part_id", IntegerType()),
     ]
+)
+
+STAGE = Stage(
+    "pack",
+    PACKED_SCHEMA,
+    help="run the context-packing pass instead of extraction: --input is a "
+    "committed extraction table root, --output receives per-doc placements "
+    "in the 512-token context stream (window-local packing, pack_epoch = "
+    "consumed source snapshot; incremental and exactly-once like "
+    "--signals). With --kept-from CURATE_ROOT [--drop-neardups-from "
+    "NEARDUP_ROOT] and --rebuild, packs the composed kept corpus",
+    options=("kept_from", "drop_neardups_from", "cost"),
+    rebuild_only=("kept_from",),
 )
 
 
@@ -193,11 +204,9 @@ def derive_pack_bpe_rules(extracted: DataFrame) -> list[str]:
 
 def table_cost(out_log: CommitLog) -> tuple[str | None, list[str] | None]:
     """(cost model, recorded BPE rules) of this pack table — last
-    committed chunk's record, like neardup's table_scope. (None, None)
+    committed chunk's record, like derived.table_scope. (None, None)
     on an empty table; a pre-cost-feature table reads as 'ws' (the only
     model that existed when it was written)."""
-    from .derived import latest_metric
-
     chunks = out_log.committed_chunks()
     if not chunks:
         return None, None
@@ -249,7 +258,7 @@ def run_pack(
             "table's verdicts define — always run it with rebuild=True "
             "(job.py --pack --kept-from ... --rebuild)"
         )
-    prior = _table_scope(out_log)
+    prior = table_scope(out_log)
     if prior is not None and prior != scope and not rebuild:
         raise ValueError(
             f"pack table scope is '{prior}' but this run is '{scope}'; "
@@ -289,19 +298,12 @@ def run_pack(
         spark,
         src_log,
         out_log,
-        PACKED_SCHEMA,
-        "pack",
+        STAGE,
         _cost_compute,
         rebuild=rebuild,
         rebuild_compute=_rebuild,
         extra_metrics=extra,
     )
-
-
-def _table_scope(out_log: CommitLog) -> str | None:
-    from .neardup import table_scope
-
-    return table_scope(out_log)
 
 
 def read_packed(
@@ -316,17 +318,18 @@ def run_pack_job(
     out_root: str,
     rebuild: bool = False,
     kept_from: str | None = None,
-    neardup_from: str | None = None,
-    cost: str = "ws",
+    drop_neardups_from: str | None = None,
+    cost: str | None = None,
 ) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_pack(
-        spark,
-        CommitLog(src_root),
-        CommitLog(out_root),
+    """Table roots name ``run_pack``'s ``kept_from``/``neardup_from``
+    logs; ``cost`` None is 'ws'."""
+    return timed(
+        run_pack, spark, CommitLog(src_root), CommitLog(out_root),
         rebuild=rebuild,
         kept_from=None if kept_from is None else CommitLog(kept_from),
-        neardup_from=None if neardup_from is None else CommitLog(neardup_from),
-        cost=cost,
+        neardup_from=(
+            None if drop_neardups_from is None
+            else CommitLog(drop_neardups_from)
+        ),
+        cost=cost or "ws",
     )
-    return report, time.monotonic() - t0

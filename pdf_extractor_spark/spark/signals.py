@@ -31,8 +31,6 @@ bounded by its delta size.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -45,7 +43,7 @@ from pyspark.sql.types import (
 
 from ..ops.portable import tokens
 from ..ops.textstats import STOPWORDS, lang_argmax, lang_marker_counts, simpson_pairs
-from .derived import run_derived_stage
+from .derived import Stage, run_derived_stage, timed
 from .lineage import CommitLog, RunReport
 
 # bump whenever compute_signals' semantics change: fixture caches (e.g. the
@@ -64,6 +62,15 @@ SIGNALS_SCHEMA = StructType(
         StructField("simpson_micros", LongType()),
         StructField("part_id", IntegerType()),
     ]
+)
+
+STAGE = Stage(
+    "signals",
+    SIGNALS_SCHEMA,
+    help="run the derived quality-signals pass instead of extraction: "
+    "--input is a committed extraction table root, --output receives the "
+    "signals table (incremental: only source snapshots committed since the "
+    "last run are recomputed; exactly-once via the same commit markers)",
 )
 
 
@@ -178,9 +185,8 @@ def run_signals(
         spark,
         src_log,
         out_log,
-        SIGNALS_SCHEMA,
-        "signals",
-        compute_signals,
+        STAGE,
+        lambda df, _horizon: compute_signals(df),
         rebuild=rebuild,
     )
 
@@ -194,8 +200,5 @@ def read_signals(
 def run_signals_job(
     spark: SparkSession, src_root: str, out_root: str, rebuild: bool = False
 ) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_signals(
-        spark, CommitLog(src_root), CommitLog(out_root), rebuild=rebuild
-    )
-    return report, time.monotonic() - t0
+    return timed(run_signals, spark, CommitLog(src_root), CommitLog(out_root),
+                 rebuild=rebuild)

@@ -269,7 +269,7 @@ def test_neardup_over_kept_collapses_residual_clusters(spark, tmp_path):
 
     # the kept-scoped re-decision (job.py --neardup --over-kept --rebuild)
     rep = run_neardup_job(spark, str(tmp_path / "src"), str(tmp_path / "ndk"),
-                          rebuild=True, kept_from=str(tmp_path / "cur"))[0]
+                          rebuild=True, over_kept=str(tmp_path / "cur"))[0]
     assert rep.docs_processed == 2  # only the kept corpus
     got = _rows(spark, ndk)
     assert set(got) == {"5", "9"}
