@@ -2,7 +2,7 @@
 
 One document in (ordered input spans), one ordered output span sequence +
 metrics out. This module is shared verbatim by the local test oracle and the
-Spark ``mapInPandas`` kernel (SURVEY.md §7.0), which is what makes the
+Spark ``mapInArrow`` kernel (SURVEY.md §7.0), which is what makes the
 span-sequence-equality contract (BASELINE.json:input_hint) cheap to test.
 
 Dispatch by ``kind`` mirrors the reference's extension -> category routing

@@ -23,13 +23,18 @@ try:
 except ModuleNotFoundError:  # plain `python pdf_extractor_spark/job.py`
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdf_extractor_spark.spark import curate, materialize, neardup, pack, signals
+from pdf_extractor_spark.spark import (
+    curate,
+    lineage,
+    materialize,
+    neardup,
+    pack,
+    signals,
+)
 from pdf_extractor_spark.spark.lineage import (
     CommitLog,
     RunReport,
     compact_chunks,
-    reextract_parts,
-    run_extraction,
 )
 
 # The derived stages, in chain order. Each module's STAGE record names its
@@ -559,13 +564,15 @@ def main(argv: list[str] | None = None) -> int:
             t0 = time.monotonic()
             if args.refresh_parts:
                 parts = [int(x) for x in args.refresh_parts.split(",") if x != ""]
-                report = reextract_parts(
+                # looked up on the module at call time, like the stage
+                # dispatch, so a wrapper installed on it (tracing) applies
+                report = lineage.reextract_parts(
                     spark, docs, log, parts,
                     num_partitions=args.num_partitions, passwords=passwords,
                     password_col=password_col,
                 )
             else:
-                report = run_extraction(
+                report = lineage.run_extraction(
                     spark,
                     docs,
                     log,

@@ -3,7 +3,7 @@
 Replaces the reference's sequential driver loop (``dashboard.py:588`` — one
 file at a time, no file-level parallelism) with a declarative plan:
 
-    documents --(size-annotated per-doc hash scatter)--> mapInPandas(extract)
+    documents --(size-annotated per-doc hash scatter)--> mapInArrow(extract)
               --> extracted spans + per-doc metrics --> committed parquet +
               lineage rows (see lineage.py)
 
@@ -25,6 +25,9 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -153,6 +156,54 @@ def balance_partitions(
     return df.repartition(num_partitions, F.col("doc_id"))
 
 
+_worker_prepared = False
+
+
+def prepare_worker() -> None:
+    """Make ``importlib.invalidate_caches()`` cheap in this Python worker.
+
+    PySpark calls ``importlib.invalidate_caches()`` at the start of every
+    task (``worker_util.setup_spark_files``). On Python < 3.13
+    ``zipimporter.invalidate_caches`` is eager: it re-reads the archive's
+    whole central directory at once, and a reused worker holds one
+    zipimporter per package directory it imported from ``pyspark.zip``
+    (~1,670 entries each) plus the shipped package zip. That re-parse
+    costs more per task than the extraction kernel on a typical partition.
+
+    After this call a zipimporter re-reads its archive only when the
+    archive's ``(st_mtime_ns, st_size, st_ino)`` differs from the stat it
+    took just before its last re-read. A rewritten archive (``addPyFile``,
+    ``--py-files``) is still re-read, and a failed ``stat`` re-reads as
+    before — the same stat rule ``FileFinder`` applies to directories.
+    Python >= 3.13 re-reads lazily already, so nothing is patched there.
+
+    Idempotent, and the patch lives as long as the worker process, so every
+    later task in a reused worker benefits. The extraction kernel factory
+    is the one place that calls it; see CLAUDE.md.
+    """
+    global _worker_prepared
+    if _worker_prepared:
+        return
+    _worker_prepared = True
+    if sys.version_info >= (3, 13):
+        return
+    orig = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        if key is None or key != getattr(self, "_stat_key", None):
+            orig(self)
+            # stat'ed before the read, so a write racing it re-reads next time
+            self._stat_key = key
+
+    invalidate_caches.__wrapped__ = orig
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 def _make_extract_batches_arrow(
     kernel_name: str, passwords: tuple[bytes, ...] = ()
 ):
@@ -183,6 +234,7 @@ def _make_extract_batches_arrow(
     """
 
     def _gen(batches):
+        prepare_worker()
         import pyarrow as pa
 
         from pdf_extractor_spark.core import extractor
@@ -320,6 +372,7 @@ _extract_batches_arrow = _make_extract_batches_arrow("extract_document")
 def _extract_batches(
     batches: Iterator[pd.DataFrame], passwords: tuple[bytes, ...] = ()
 ) -> Iterator[pd.DataFrame]:
+    prepare_worker()
     # imported inside the worker so the Python workers only need core/
     from pdf_extractor_spark.core.extractor import extract_document
 
